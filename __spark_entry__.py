@@ -69,18 +69,37 @@ _MODULES = (
 )
 
 # The driver's correctness gate checks at most 50 queries per round, in
-# enumeration order.  With 392 declared queries, plain module order
-# would starve the tail modules of a driver-verified CORRECTNESS row
-# forever.  Round-15 rotation (VERDICT r14 Next #1, histogram recomputed
-# from CORRECTNESS_r01..r14 keys: r6=7, r7=41, r8=2, r9=33 stale):
-# (a) the 28 round-14 additions the driver has NEVER checked lead;
-# (b) slots 29-35 take the 7-query round-6 remainder (stalest cohort);
-# (c) slots 36-50 take the alphabetically-first 15 of the 41-query
-# round-7 cohort.  Slots 51+ queue for round 16: the r7 remainder (26),
-# then r8 (2), then r9 (33).  Everything listed passes
-# tools/check_correctness.py locally at sf0.01 and sf0.001.
+# enumeration order, so the order leads with what the latest change
+# touched:
+# (a) the declared queries whose shared kernels moved into the session
+#     artifact registry (rakam_api_spark.artifacts) and the queries that
+#     read those artifacts (19);
+# (b) the previous rotation's order (the round-14 additions, then the
+#     stalest gate-checked cohorts), minus the queries (a) moved up.
+# Everything listed passes tools/check_correctness.py at sf0.01 and
+# sf0.001.
 _GATE_PRIORITY = (
-    # (a) round-14 additions, never driver-checked (28)
+    # (a) session-artifact kernels and their consumers
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "ann_brute_force_topk",
+    "embedding_cosine_dedup",
+    "dup_span_extents",
+    "lsh_band_efficiency",
+    "dedup_clusters",
+    "dedup_survivor_selection",
+    "dup_cluster_lang_purity",
+    "cluster_safe_splits",
+    "ann_recall_audit",
+    "ivf_nprobe_recall_curve",
+    "knn_purity_at_k",
+    "crosslingual_mining",
+    "span_dedup_savings",
+    "dedup_precision_audit",
+    "dedup_transitivity_audit",
+    "dedup_threshold_curve",
+    "lang_profile_confusion",
+    # (b) previous rotation
     "table_changes_rollup",
     "matview_incremental_rollup",
     "priority_escalation_matrix",
@@ -109,7 +128,6 @@ _GATE_PRIORITY = (
     "dimension_variance_topk",
     "window_value_quantiles",
     "window_type_churn",
-    # (b) round-6 remainder (7; slots 29-35)
     "session_entry_exit",
     "sparse_tfidf_pairs",
     "text_quality",
@@ -117,7 +135,6 @@ _GATE_PRIORITY = (
     "token_counts",
     "top_customers",
     "training_shuffle",
-    # (c) alphabetically-first 15 of the round-7 cohort (slots 36-50)
     "ab_test_lift",
     "ann_filtered_ivf_topk",
     "attribution_time_decay",
@@ -129,11 +146,9 @@ _GATE_PRIORITY = (
     "daily_anomaly_zscore",
     "daily_value_moving_avg",
     "dau",
-    "dup_span_extents",
     "engaged_user_days_setops",
     "enrich_geoip",
     "enrich_useragent",
-    # queued for round 16: the r7 remainder (26) ...
     "event_type_hourly_share",
     "funnel_signup_click_purchase",
     "funnel_step_latency",
@@ -153,17 +168,14 @@ _GATE_PRIORITY = (
     "seg_daily_event_counts",
     "sessionization_stats",
     "source_vocab_overlap",
-    "span_dedup_savings",
     "time_to_convert",
     "top_event_paths",
     "top_event_values",
     "user_metric_correlation",
     "user_profile_snapshot",
     "value_percentiles",
-    # ... then the r8-stale cohort (2)
     "hybrid_search",
     "semantic_contamination",
-    # ... then the r9-stale cohort (33)
     "attribution_position_based",
     "benford_price_audit",
     "contamination_check",
@@ -173,7 +185,6 @@ _GATE_PRIORITY = (
     "daily_new_vs_returning",
     "data_quality_audit",
     "dedup_cluster_size_histogram",
-    "dedup_clusters",
     "dedup_savings_by_source",
     "discount_elasticity_by_priority",
     "doc_chunking",

@@ -37,6 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..tables import load_table
 
 N_HASHES = 16
@@ -126,51 +127,35 @@ FROM documents
 # --- exact n-gram jaccard ------------------------------------------------
 
 
-#: per-session memo of the FULL-CORPUS shingle frame — the shared
-#: kernel of every exact-Jaccard query (clusters, threshold curve,
-#: size histogram, transitivity audit, safe splits): each used to
-#: build, cache, and count an identical copy per call.  Same safety
-#: argument as tables._TABLE_MEMO (immutable inputs, deterministic
-#: derivation); keyed weakly by session so a stopped session's cached
-#: RDD doesn't pin memory.
-from weakref import WeakKeyDictionary
-
-_SHINGLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    try:
-        per = _SHINGLE_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
-    sh = word_shingles(_docs(spark, sf_dir)).cache()
-    sh.count()  # deterministic single materialization (minhash note)
-    if per is not None:
-        per[sf_dir] = sh
-    return sh
+    """Cached full-corpus shingle frame, a session artifact: the
+    shared kernel of every exact-Jaccard query (clusters, threshold
+    curve, size histogram, transitivity audit, safe splits), which
+    each used to build, cache and count an identical copy per call."""
+
+    def build():
+        sh = word_shingles(_docs(spark, sf_dir)).cache()
+        sh.count()  # deterministic single materialization (minhash note)
+        return sh
+
+    return artifact(spark, ("shingles", sf_dir), build)
 
 
-#: per-session memo of the VERIFIED full-corpus pair set at a given
-#: threshold — clusters, survivor selection, safe splits, the size
-#: histogram and the transitivity audit all consume the same 0.6-pair
-#: graph and each paid the shingle self-join again.  The pair set is
-#: deterministic (exact integer Jaccard, ordered output) and BOUNDED
-#: (the dedup output, not the corpus), so an eager localCheckpoint is
-#: a small pin.  Keyed weakly by session like the other memos.
-_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _corpus_pairs_memo(spark: SparkSession, sf_dir: str, threshold: float):
-    """Memoized materialized result frame for the docs=None pair
-    sweep, or None when the session can't key a memo."""
-    try:
-        per = _PAIRS_MEMO.setdefault(spark, {})
-    except TypeError:
-        return None, None
-    return per, (sf_dir, float(threshold))
+def _corpus_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float = 0.6
+) -> DataFrame:
+    """The verified full-corpus pair set as a checkpointed session
+    artifact: clusters, survivor selection, language purity and safe
+    splits all consume the same pair graph, and the set is bounded by
+    the dedup output, not the corpus.  The declared
+    ``dedup_ngram_jaccard`` query runs the join itself."""
+    return artifact(
+        spark,
+        ("ngram_pairs", sf_dir, float(threshold)),
+        lambda: ngram_jaccard_pairs(spark, sf_dir, threshold).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 #: exact-baseline skew guard: a shingle shared by k documents emits
@@ -204,18 +189,14 @@ def ngram_jaccard_pairs(
     ``_HOT_SHINGLE_DF_CAP``); ``None`` disables the guard.
     """
     if docs is None:
-        per, key = _corpus_pairs_memo(spark, sf_dir, threshold)
-        if per is not None and key in per:
-            return per[key]
         sh = _corpus_shingles(spark, sf_dir)
     else:
-        per, key = None, None
-        sh = word_shingles(docs).cache()
-        sh.count()  # deterministic single materialization (minhash note)
+        # read by the skew check and both join sides: checkpointed,
+        # so its blocks go with the returned frame
+        sh = word_shingles(docs).localCheckpoint(eager=True)
     if df_cap is not None:
-        # one aggregate over the (cached) shingle frame; on the memoized
-        # corpus path this runs once per session.  Fail loudly BEFORE
-        # the join, never quadratically inside it.
+        # one aggregate over the materialized shingle frame.  Fail
+        # loudly BEFORE the join, never quadratically inside it.
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -240,7 +221,7 @@ def ngram_jaccard_pairs(
     )
     s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
+    return (
         inter.join(s1, "d1")
         .join(s2, "d2")
         .withColumn(
@@ -251,13 +232,6 @@ def ngram_jaccard_pairs(
         .select("d1", "d2", "inter", "jaccard")
         .orderBy("d1", "d2")
     )
-    if per is not None:
-        # materialize the (bounded) verified pair set once; every
-        # 0.6-threshold consumer reuses it instead of re-running the
-        # shingle self-join
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
 
 
 NGRAM_JACCARD_ORACLE = """
@@ -331,38 +305,17 @@ def _minhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", text_col).mapInPandas(kernel, schema)
 
 
-#: per-session memos of the full-corpus LSH kernels, shared by the
-#: declared ``dedup_minhash_lsh`` query and ``lsh_band_efficiency``
-#: (which audits the SAME index): the MinHash signature frame (one
-#: Arrow kernel pass over every document), the banded candidate pair
-#: frame (band, d1, d2), and the verified pair set.  Before r17 the
-#: band audit re-ran the entire signature → banding → candidate →
-#: exact-verify chain that the pair query had just executed
-#: (guide §2.4: compute a shared intermediate once).  Same safety
-#: argument as _SHINGLE_MEMO / _PAIRS_MEMO: immutable inputs,
-#: deterministic derivation (md5-based OPH, ordered collects),
-#: bounded materializations, weak session keys — rebuilt from parquet
-#: in every fresh process.
-_SIG_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-_BAND_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-_LSH_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _corpus_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized cached full-corpus MinHash signature frame (one row
-    per doc — cheap to hold; the kernel is the expensive part)."""
-    try:
-        per = _SIG_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
-    sig = _minhash_signature(_docs(spark, sf_dir)).cache()
-    sig.count()
-    if per is not None:
-        per[sf_dir] = sig
-    return sig
+    """Cached full-corpus MinHash signature frame, a session artifact
+    shared by ``dedup_minhash_lsh`` and ``lsh_band_efficiency`` (one
+    row per doc, cheap to hold; the kernel is the expensive part)."""
+
+    def build():
+        sig = _minhash_signature(_docs(spark, sf_dir)).cache()
+        sig.count()
+        return sig
+
+    return artifact(spark, ("minhash_sig", sf_dir), build)
 
 
 def _band_keys(sig: DataFrame) -> DataFrame:
@@ -396,35 +349,51 @@ def _bucket_pair_expr(max_bucket: int):
     )
 
 
-def _corpus_band_pairs(spark: SparkSession, sf_dir: str, max_bucket: int) -> DataFrame:
-    """Memoized (band, d1, d2) candidate frame over the full corpus —
-    the banded LSH sweep BEFORE collapsing bands: the pair query
-    needs the distinct (d1, d2) projection, the band audit the per-
-    band counts; both read one materialization.  Bounded by the
-    bucket expansion (max_bucket² per bucket, star beyond)."""
-    try:
-        per = _BAND_PAIRS_MEMO.setdefault(spark, {})
-        key = (sf_dir, max_bucket)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:
-        per, key = None, None
+def _band_pairs(sig: DataFrame, max_bucket: int) -> DataFrame:
+    """(band, d1, d2) candidate frame: the banded LSH sweep BEFORE
+    collapsing bands.  Bounded by the bucket expansion (max_bucket²
+    per bucket, star beyond)."""
     buckets = (
-        _band_keys(_corpus_sig(spark, sf_dir))
+        _band_keys(sig)
         .groupBy("band", "band_key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .where(F.size("ds") > 1)
     )
-    out = (
+    return (
         buckets.select("band", F.explode(_bucket_pair_expr(max_bucket)).alias("p"))
         .select("band", "p.d1", "p.d2")
         .distinct()
     )
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
+
+
+def _corpus_band_pairs(
+    spark: SparkSession, sf_dir: str, max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """(band pairs, distinct (d1, d2) candidates) over the full corpus,
+    both checkpointed, as one session artifact: the pair query needs
+    the candidates, the band audit the per-band counts."""
+
+    def build():
+        sig = _corpus_sig(spark, sf_dir)
+        bands = _band_pairs(sig, max_bucket).localCheckpoint(eager=True)
+        return bands, bands.select("d1", "d2").distinct().localCheckpoint(eager=True)
+
+    return artifact(spark, ("lsh_bands", sf_dir, max_bucket), build)
+
+
+def _lsh_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float, max_bucket: int
+) -> DataFrame:
+    """The verified LSH pair set, checkpointed, as the session artifact
+    ``lsh_band_efficiency`` audits.  The declared ``dedup_minhash_lsh``
+    query runs the verification itself."""
+    return artifact(
+        spark,
+        ("lsh_pairs", sf_dir, float(threshold), max_bucket),
+        lambda: minhash_lsh_pairs(
+            spark, sf_dir, threshold=threshold, max_bucket=max_bucket
+        ).localCheckpoint(eager=True),
+    )
 
 
 def minhash_lsh_pairs(
@@ -458,50 +427,22 @@ def minhash_lsh_pairs(
     shuffle is O(docs) or O(candidates), never O(corpus shingles).
     """
     if docs is None:
-        # full-corpus path: memoized output (this function IS the
-        # declared dedup_minhash_lsh query AND lsh_band_efficiency's
-        # verified set), built from the memoized signature/band-pair
-        # kernels so the audit never re-runs them
-        try:
-            per = _LSH_PAIRS_MEMO.setdefault(spark, {})
-            key = (sf_dir, float(threshold), max_bucket)
-            hit = per.get(key)
-            if hit is not None:
-                return hit
-        except TypeError:  # unhashable/mock session
-            per, key = None, None
         docs = _docs(spark, sf_dir)
         sig = _corpus_sig(spark, sf_dir)
-        # candidates feed three branches (two id sets + the
-        # intersection join) — cache the (small) pair list
+        _bands, candidates = _corpus_band_pairs(spark, sf_dir, max_bucket)
+    else:
+        # sig feeds three plan branches (band keys + both size joins)
+        # and candidates three more (two id sets + the intersection
+        # join); Spark does not CSE across branches, so both are
+        # materialized once, as checkpoints whose blocks go with the
+        # returned frame
+        sig = _minhash_signature(docs).localCheckpoint(eager=True)
         candidates = (
-            _corpus_band_pairs(spark, sf_dir, max_bucket)
+            _band_pairs(sig, max_bucket)
             .select("d1", "d2")
             .distinct()
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        candidates.count()
-    else:
-        per, key = None, None
-        # sig feeds THREE plan branches (band keys + both size joins);
-        # Spark does not CSE across branches, so an uncached sig would
-        # re-run the signature kernel once per branch.  One row per
-        # doc — cheap to hold.
-        sig = _minhash_signature(docs).cache()
-        sig.count()
-        buckets = (
-            _band_keys(sig)
-            .groupBy("band", "band_key")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-            .where(F.size("ds") > 1)
-        )
-        candidates = (
-            buckets.select(F.explode(_bucket_pair_expr(max_bucket)).alias("p"))
-            .select("p.d1", "p.d2")
-            .distinct()
-            .cache()
-        )
-        candidates.count()
     # verify candidates with exact jaccard.  Prune FIRST: shingles
     # are exploded ONLY for candidate docs (semi-join on the
     # candidate id sets BEFORE word_shingles) — the round-2 plan
@@ -515,7 +456,9 @@ def minhash_lsh_pairs(
     ids1 = candidates.select(F.col("d1").alias("doc_id")).distinct()
     ids2 = candidates.select(F.col("d2").alias("doc_id")).distinct()
     cand_ids = ids1.unionByName(ids2).distinct()
-    sh = word_shingles(docs.join(cand_ids, "doc_id", "left_semi")).cache()
+    sh = word_shingles(docs.join(cand_ids, "doc_id", "left_semi")).localCheckpoint(
+        eager=True
+    )
     sh1 = sh.join(ids1, "doc_id", "left_semi").select(
         F.col("doc_id").alias("d1"), "shingle"
     )
@@ -530,7 +473,7 @@ def minhash_lsh_pairs(
     )
     s1 = sig.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     s2 = sig.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
+    return (
         inter.join(s1, "d1")
         .join(s2, "d2")
         .withColumn(
@@ -541,14 +484,6 @@ def minhash_lsh_pairs(
         .select("d1", "d2", "jaccard")
         .orderBy("d1", "d2")
     )
-    if per is not None:
-        # materialize the (bounded, near-dup-sized) verified pair set
-        # once per session — deterministic kernel, rebuilt from
-        # parquet in every fresh process (same discipline as
-        # _PAIRS_MEMO / _SAMPLE_GRAPH_MEMO)
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
 
 
 MINHASH_LSH_ORACLE = """
@@ -634,20 +569,16 @@ def lsh_band_efficiency(
     ``pq_reconstruction_error`` — every index here ships with its
     health report.
 
-    Reuses the production kernels — LITERALLY, since r17: the
-    signature frame, the (band, d1, d2) candidate frame and the
-    verified pair set are the per-session memoized kernels the
-    declared ``dedup_minhash_lsh`` query builds, so the audit adds
-    only the per-band rollups instead of re-running the whole
-    signature → banding → candidate → exact-verify chain
-    (guide §2.4).  The multi-doc bucket count per band is a partial-
-    aggregatable (band, key) count over the band-key frame — never a
-    second collect_list pass.  Counts are exact; precision is one
+    Reuses the production kernels: the signature frame and the
+    (band, d1, d2) candidate frame are the session artifacts the
+    declared ``dedup_minhash_lsh`` query reads, and the verified pair
+    set is one more artifact built from them, so a repeat audit adds
+    only the per-band rollups (guide §2.4).  The multi-doc bucket
+    count per band is a partial-aggregatable (band, key) count over
+    the band-key frame — never a second collect_list pass.  Counts are exact; precision is one
     double division (NULL for a candidate-less band)."""
-    band_pairs = _corpus_band_pairs(spark, sf_dir, max_bucket)
-    verified = minhash_lsh_pairs(
-        spark, sf_dir, threshold=threshold, max_bucket=max_bucket
-    ).select("d1", "d2")
+    band_pairs, _candidates = _corpus_band_pairs(spark, sf_dir, max_bucket)
+    verified = _lsh_pairs(spark, sf_dir, threshold, max_bucket).select("d1", "d2")
     hits = band_pairs.join(verified, ["d1", "d2"], "left_semi")
     n_buckets = (
         _band_keys(_corpus_sig(spark, sf_dir))
@@ -970,15 +901,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.6) -> 
     in the component), the cluster size, and whether this doc is the
     canonical keeper.
     """
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-        .select("d1", "d2")
-        .cache()
-    )
-    edges.count()
-    result = connected_components(edges)
-    edges.unpersist()
-    return result
+    return connected_components(_corpus_pairs(spark, sf_dir, threshold).select("d1", "d2"))
 
 
 def _components_driver_unionfind(edges: DataFrame) -> DataFrame:
@@ -1147,130 +1070,42 @@ FROM labels l JOIN csize c USING (cluster_id)
 AUDIT_MAX_DOCS = 400
 
 
-#: per-session memo of UNTHRESHOLDED exact-Jaccard pair graphs over
-#: the deterministic hash-rank samples, keyed (sf_dir, max_docs).
-#: The three sampled audits (precision 400, transitivity 2000,
-#: threshold-curve 2000) each used to re-run the shingle self-join on
-#: their own sample even though only the FINAL threshold filter
-#: differs — and exact Jaccard is a pairwise function, so the graph
-#: over a hash-rank-prefix sample is exactly the larger graph
-#: restricted to pairs with both endpoints in the prefix.  One build
-#: per (sf, sample size) now serves every threshold, and a smaller
-#: sample derives from a memoized superset by two semi-joins instead
-#: of a fresh self-join (guide §2.4: remove the shuffle outright).
-#: Same memo-safety argument as _PAIRS_MEMO (immutable inputs,
-#: deterministic derivation, bounded output, weak session key).
-_SAMPLE_GRAPH_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _sample_pair_graph(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
-    """Memoized (d1, d2, inter, jaccard) pair frame — NO threshold
-    filter — over the ``max_docs`` hash-rank sample.  Bounded by
-    max_docs·(max_docs−1)/2 rows BY CONSTRUCTION, so the eager
-    localCheckpoint is a small pin.  Falls back to an uncached build
-    for mock/unhashable sessions."""
-    try:
-        per = _SAMPLE_GRAPH_MEMO.setdefault(spark, {})
-    except TypeError:
-        per = None
-    key = (sf_dir, max_docs)
-    if per is not None:
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-        # pairwise restriction of a memoized SUPERSET sample: the
-        # hash-rank sample of size m is a prefix of the sample of
-        # size M ≥ m, and every (inter, jaccard) value depends only
-        # on the two docs — so filtering the big graph to pairs with
-        # both endpoints in the small sample IS the small graph.
-        sup = [k for k in per if k[0] == sf_dir and k[1] >= max_docs]
-        if sup:
-            big = per[min(sup, key=lambda k: k[1])]
-            chosen = _audit_chosen(spark, sf_dir, max_docs)
-            out = big.join(
-                F.broadcast(chosen.withColumnRenamed("doc_id", "d1")), "d1", "left_semi"
-            ).join(
-                F.broadcast(chosen.withColumnRenamed("doc_id", "d2")), "d2", "left_semi"
-            ).select("d1", "d2", "inter", "jaccard")
-            per[key] = out
-            return out
-    sample = audit_sample(spark, sf_dir, max_docs)
-    sh = word_shingles(sample).cache()
-    sh.count()  # deterministic single materialization (minhash note)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.max("df").alias("max_df"))
-        .first()
+    """(d1, d2, inter, jaccard) pair frame — NO threshold filter —
+    over the ``max_docs`` hash-rank sample, as a checkpointed session
+    artifact: the sampled audits differ only in the final threshold
+    filter, so one build per (sf, sample size) serves every threshold.
+    Bounded by max_docs·(max_docs−1)/2 rows BY CONSTRUCTION, so the
+    checkpoint is a small pin."""
+    return artifact(
+        spark,
+        ("sample_graph", sf_dir, max_docs),
+        lambda: ngram_jaccard_pairs(
+            spark, sf_dir, threshold=0.0, docs=audit_sample(spark, sf_dir, max_docs)
+        ).localCheckpoint(eager=True),
     )
-    if hot is not None and (hot["max_df"] or 0) > _HOT_SHINGLE_DF_CAP:
-        raise ValueError(
-            f"_sample_pair_graph: hottest shingle appears in {hot['max_df']} "
-            f"documents (> df_cap={_HOT_SHINGLE_DF_CAP}); use the LSH path"
-        )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
-        )
-        .select("d1", "d2", "inter", "jaccard")
-    )
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-        sh.unpersist()
-    return out
-
-
-#: per-session memo of the hash-ranked audit id frame (doc_id, _h):
-#: the TakeOrdered corpus scan behind EVERY audit_sample call — the
-#: precision audit, the transitivity audit, the threshold curve and
-#: the pair-graph restriction each re-ran it (a ~2 s full-corpus pass
-#: at sf0.1, measured r17).  ≤ max_docs rows, deterministic md5 rank,
-#: eagerly checkpointed; a smaller sample is a RANK PREFIX of a
-#: larger one, derived driver-free by re-limiting the memoized frame
-#: (guide §2.4: compute a shared intermediate once).
-_AUDIT_IDS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def _audit_chosen(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
-    """(doc_id) frame of the ``max_docs`` hash-rank sample."""
-    try:
-        per = _AUDIT_IDS_MEMO.setdefault(spark, {})
-    except TypeError:  # unhashable/mock session
-        per = None
-    if per is not None:
-        key = (sf_dir, max_docs)
-        hit = per.get(key)
-        if hit is not None:
-            return hit.select("doc_id")
-        sup = [k for k in per if k[0] == sf_dir and k[1] >= max_docs]
-        if sup:
-            big = per[min(sup, key=lambda k: k[1])]
-            out = big.orderBy("_h", "doc_id").limit(max_docs)
-            per[key] = out
-            return out.select("doc_id")
-    chosen = (
-        _docs(spark, sf_dir)
+    """(doc_id) frame of the ``max_docs`` hash-rank sample.  The
+    ranked id frame (doc_id, _h) is a checkpointed session artifact
+    of at least :data:`CURVE_MAX_DOCS` rows: the TakeOrdered corpus
+    scan behind every audit sample (a ~2 s full-corpus pass at sf0.1)
+    runs once, and a smaller sample is a RANK PREFIX of it, derived
+    without a collect by re-limiting (guide §2.4)."""
+    n = max(max_docs, CURVE_MAX_DOCS)
+    ranked = artifact(
+        spark,
+        ("audit_ids", sf_dir, n),
+        lambda: _docs(spark, sf_dir)
         .select("doc_id", F.md5(F.col("doc_id").cast("string")).alias("_h"))
         .orderBy("_h", "doc_id")
-        .limit(max_docs)
+        .limit(n)
+        .localCheckpoint(eager=True),
     )
-    if per is not None:
-        chosen = chosen.localCheckpoint(eager=True)
-        per[(sf_dir, max_docs)] = chosen
-    return chosen.select("doc_id")
+    if max_docs < n:
+        ranked = ranked.orderBy("_h", "doc_id").limit(max_docs)
+    return ranked.select("doc_id")
 
 
 def audit_sample(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
@@ -1280,9 +1115,9 @@ def audit_sample(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
     content.  Selection is a distributed top-N (``orderBy().limit()``
     → TakeOrderedAndProject: per-partition heaps over a 2-column slim
     frame, no global sort, no window) followed by a broadcast
-    semi-join back to the full rows — O(corpus) scan, O(max_docs)
-    memory, at any corpus size.  The id frame is memoized per session
-    (:data:`_AUDIT_IDS_MEMO`), so repeated audits pay the TakeOrdered
+    semi-join back to the full rows — O(corpus) scan,
+    O(max(max_docs, CURVE_MAX_DOCS)) memory, at any corpus size.  The id frame is a session artifact
+    (:func:`_audit_chosen`), so repeated audits pay the TakeOrdered
     scan once."""
     d = _docs(spark, sf_dir)
     return d.join(F.broadcast(_audit_chosen(spark, sf_dir, max_docs)), "doc_id")
@@ -1861,7 +1696,7 @@ def dedup_survivor_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
+    pairs = _corpus_pairs(spark, sf_dir).select("d1", "d2")
     labels = connected_components(pairs).select("doc_id", "cluster_id")
     j = docs.join(labels, "doc_id", "left").select(
         "doc_id",
@@ -1928,7 +1763,7 @@ def dup_cluster_lang_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram over them.  Everything after the (cached) pair sweep
     is dedup-output-sized."""
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
+    pairs = _corpus_pairs(spark, sf_dir).select("d1", "d2")
     labels = connected_components(pairs).select("doc_id", "cluster_id")
     cl = (
         labels.join(docs.select("doc_id", "lang"), "doc_id")

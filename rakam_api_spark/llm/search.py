@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..artifacts import artifact
 from ..tables import load_table
 from .dedup import word_shingles
 
@@ -236,7 +237,7 @@ def dup_span_extents(
     Reference scope: beyond-reference (no analytics engine in the
     reference); companion to :func:`dup_ngram_spans`' fixed-n report.
     """
-    spans = _span_frame(spark, sf_dir, n=n, occ_cap=occ_cap, min_tokens=min_tokens)
+    spans = _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens)
     return spans.orderBy(
         F.desc("span_tokens"),
         F.asc("doc_a"),
@@ -246,34 +247,19 @@ def dup_span_extents(
     ).limit(k)
 
 
-#: per-session memo of the maximal-span frame keyed
-#: (sf_dir, n, occ_cap, min_tokens): dup_span_extents and
-#: span_dedup_savings consume the IDENTICAL frame and each paid the
-#: positional-gram explode + gram aggregate + pair self-join + island
-#: windows again (guide §2.4).  The frame is bounded (hot grams are
-#: occ_cap-excluded, spans ≥ min_tokens only), deterministic, and the
-#: inputs immutable — same safety argument as dedup._PAIRS_MEMO.
-from weakref import WeakKeyDictionary
-
-_SPAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _span_frame(
     spark: SparkSession, sf_dir: str, n: int, occ_cap: int, min_tokens: int
 ) -> DataFrame:
-    try:
-        per = _SPAN_MEMO.setdefault(spark, {})
-        key = (sf_dir, n, occ_cap, min_tokens)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per, key = None, None
-    out = _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens)
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
+    """The maximal-span frame as a checkpointed session artifact, read
+    by :func:`span_dedup_savings`.  The frame is bounded (hot grams
+    are occ_cap-excluded, spans ≥ min_tokens only)."""
+    return artifact(
+        spark,
+        ("spans", sf_dir, n, occ_cap, min_tokens),
+        lambda: _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def _span_frame_build(

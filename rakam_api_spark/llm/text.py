@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..artifacts import artifact
 from ..tables import load_table
 
 # Small fixed stopword list (subset of English function words that
@@ -2371,54 +2372,39 @@ FROM sh ORDER BY source_a, source_b
 """
 
 
-#: per-session memo of the cached (doc, bigram) count frame and its
-#: driver-side constants (lang list, smoothing denominators) — the
-#: classifier kernel of ``lang_profile_confusion``.  Without it every
-#: call re-cached a duplicate frame and re-ran the two scalar jobs at
-#: plan-construction time (ADVICE r16); with it the driver actions run
-#: once per (session, sf_dir), the same discipline as
-#: ``dedup._corpus_shingles``.  Keyed weakly by session.
-from weakref import WeakKeyDictionary
-
-_LANG_BG_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _lang_bigram_counts(spark: SparkSession, sf_dir: str):
-    """(cached dc frame, sorted langs, per-lang smoothing denoms)."""
-    try:
-        per = _LANG_BG_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
-    docs = _docs(spark, sf_dir)
-    bg = F.explode(
-        F.expr(
-            "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"
+    """(cached dc frame, sorted langs, per-lang smoothing denoms) — the
+    classifier kernel of ``lang_profile_confusion``, a session artifact
+    so the cache and the two scalar jobs at plan-construction time run
+    once per (session, sf_dir) (ADVICE r16)."""
+
+    def build():
+        docs = _docs(spark, sf_dir)
+        bg = F.explode(
+            F.expr(
+                "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"
+            )
         )
-    )
-    dc = (
-        docs.where(F.length("text") >= 2)
-        .select("doc_id", "lang", bg.alias("bg"))
-        .groupBy("doc_id", "lang", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
-    )
-    langs = sorted(r[0] for r in dc.select("lang").distinct().collect())
-    stats = dc.agg(
-        F.countDistinct("bg").alias("v"),
-        *[
-            F.sum(F.when(F.col("lang") == l, F.col("c"))).alias(f"nl{i}")
-            for i, l in enumerate(langs)
-        ],
-    ).first()
-    v = int(stats["v"])
-    denom = [int(stats[f"nl{i}"]) + v for i in range(len(langs))]
-    out = (dc, langs, denom)
-    if per is not None:
-        per[sf_dir] = out
-    return out
+        dc = (
+            docs.where(F.length("text") >= 2)
+            .select("doc_id", "lang", bg.alias("bg"))
+            .groupBy("doc_id", "lang", "bg")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .cache()
+        )
+        langs = sorted(r[0] for r in dc.select("lang").distinct().collect())
+        stats = dc.agg(
+            F.countDistinct("bg").alias("v"),
+            *[
+                F.sum(F.when(F.col("lang") == l, F.col("c"))).alias(f"nl{i}")
+                for i, l in enumerate(langs)
+            ],
+        ).first()
+        v = int(stats["v"])
+        denom = [int(stats[f"nl{i}"]) + v for i in range(len(langs))]
+        return dc, langs, denom
+
+    return artifact(spark, ("lang_bigrams", sf_dir), build)
 
 
 def lang_profile_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -147,6 +147,11 @@ class MaintenanceLockHeld(RuntimeError):
     collection — refusing to start a second concurrent rewrite."""
 
 
+#: one append lock per dead-letter path (see write_dead_letter)
+_DEAD_LETTER_GUARD = threading.Lock()
+_DEAD_LETTER_LOCKS: dict[str, threading.Lock] = {}
+
+
 class _MaintenanceLock:
     """Advisory per-collection writer lock: atomic O_EXCL create with
     the holder pid inside; stale locks (holder dead) are broken and
@@ -770,8 +775,16 @@ class EventStore:
 
     def write_dead_letter(self, project: str, df: DataFrame) -> None:
         """Uncounted dead-letter append (the caller already knows the
-        row count from its ingest Observation)."""
-        df.write.mode("append").parquet(self._table_path(project, INVALID_COLLECTION))
+        row count from its ingest Observation).  Appends to one path
+        are serialized: streaming ingest dead-letters collections on
+        a thread pool, and concurrent parquet appends share the
+        table's ``_temporary/0`` staging directory, so one job's
+        commit would delete the other's attempt files."""
+        path = self._table_path(project, INVALID_COLLECTION)
+        with _DEAD_LETTER_GUARD:
+            lock = _DEAD_LETTER_LOCKS.setdefault(path, threading.Lock())
+        with lock:
+            df.write.mode("append").parquet(path)
 
     # --- maintenance ----------------------------------------------------
 
@@ -795,10 +808,9 @@ class EventStore:
 
         Usage: ``with store.maintenance_lock(project, collection): ...``
         """
-        return _MaintenanceLock(
-            self._base_path(project, collection) + ".lock",
-            scope=self.maintenance_lock_scope,
-        )
+        base = self._base_path(project, collection)
+        os.makedirs(os.path.dirname(base), exist_ok=True)
+        return _MaintenanceLock(base + ".lock", scope=self.maintenance_lock_scope)
 
     def compact(
         self,

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import artifact
 from .session import configure_runtime
 
 TABLE_NAMES = (
@@ -48,32 +49,15 @@ TABLE_NAMES = (
 _NS_PER_DAY = 86_400_000_000_000
 
 
-#: per-session memo of loaded test tables: the testdata files are
-#: immutable (read-only by contract) and a DataFrame is an immutable
-#: logical plan, so reuse across queries is safe — and each uncached
-#: load pays a parquet-footer read + schema analysis (~0.1-0.7 s of
-#: pure driver time), which multiplied over a 240-query bench run
-#: (2 runs × 2-6 tables each) is tens of seconds of nothing.  Keyed
-#: weakly by session so a stopped session's plans don't pin memory.
-from weakref import WeakKeyDictionary
-
-_TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A test table as a session artifact: the files are read-only and
+    a DataFrame is an immutable plan, so reuse across queries is safe,
+    and each uncached load pays a parquet-footer read and schema
+    analysis (0.1-0.7 s before any job runs)."""
     configure_runtime(spark)
-    try:
-        per = _TABLE_MEMO.setdefault(spark, {})
-        key = (sf_dir, name)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session: just load uncached
-        per, key = None, None
-    df = _load_table(spark, sf_dir, name)
-    if per is not None:
-        per[key] = df
-    return df
+    return artifact(
+        spark, ("table", sf_dir, name), lambda: _load_table(spark, sf_dir, name)
+    )
 
 
 #: Tables below this on-disk size never gain from a post-scan

@@ -1,3 +1,4 @@
+import os
 import sys
 
 import pytest
@@ -100,10 +101,25 @@ _SLOW = {
 
 
 def pytest_collection_modifyitems(config, items):
+    collected = set()
     for item in items:
-        nodeid = item.nodeid.split("[", 1)[0]
-        if nodeid.removeprefix("tests/") in _SLOW:
+        nodeid = item.nodeid.split("[", 1)[0].removeprefix("tests/")
+        collected.add(nodeid)
+        if nodeid in _SLOW:
             item.add_marker(pytest.mark.slow)
+    # a stale _SLOW entry silently stops deselecting anything: fail on
+    # entries of fully collected files that match no test (a file run
+    # with ::test selection collects only part of itself)
+    files = {n.split("::", 1)[0] for n in collected}
+    partial = {
+        os.path.basename(a.split("::", 1)[0]) for a in config.args if "::" in a
+    }
+    stale = sorted(
+        e for e in _SLOW
+        if e.split("::", 1)[0] in files - partial and e not in collected
+    )
+    if stale:
+        raise pytest.UsageError(f"_SLOW entries match no collected test: {stale}")
 
 
 @pytest.fixture(scope="session")

@@ -298,3 +298,27 @@ def test_table_stats_per_month(spark, warehouse):
     assert stats["2024-01"]["min_time"].day == 1 and stats["2024-01"]["max_time"].day == 3
     # empty collection: empty frame, no error
     assert collector.store.table_stats("proj", "nothing").count() == 0
+
+
+def test_concurrent_dead_letter_appends_keep_every_row(spark, warehouse):
+    """Streaming ingest dead-letters collections on a thread pool.
+    Appends to the one dead-letter table share its parquet staging
+    directory, so they must not run at once: each thread's rows are
+    read back."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rakam_api_spark.ingest.coerce import DEAD_LETTER_SCHEMA
+
+    store = EventCollector(spark, Metastore(warehouse)).store
+    batches = [
+        spark.createDataFrame(
+            [(f"c{t}", "p", "long", f"e{t}-{i}", "bad", "x", None) for i in range(50)],
+            DEAD_LETTER_SCHEMA,
+        )
+        for t in range(3)
+    ]
+    with ThreadPoolExecutor(3) as pool:
+        list(pool.map(lambda df: store.write_dead_letter("proj", df), batches))
+
+    got = sorted(r["event_id"] for r in store.read_dead_letter("proj").collect())
+    assert got == sorted(f"e{t}-{i}" for t in range(3) for i in range(50))

@@ -254,3 +254,18 @@ def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_
     ing.process_batch(batch(0, 6), epoch_id=7)
     assert store.read("proj", "c").count() == 10
     assert txn.app_versions()["stream:testns:c"] == 8
+
+
+def test_enable_txn_on_fresh_project(spark, warehouse):
+    """A project whose warehouse directory does not exist yet can
+    switch a collection to txn mode before its first write: the
+    maintenance lock creates its parent directory."""
+    collector = _collector(spark, warehouse)
+    store = collector.store
+    store.metastore.create_project("fresh")
+    assert not os.path.exists(os.path.join(warehouse, "fresh"))
+
+    store.enable_txn("fresh", "clicks")
+    assert store.txn_mode("fresh", "clicks")
+    collector.collect("fresh", "clicks", {"x": 1, "_time": "2024-01-05 09:00:00"})
+    assert [r["x"] for r in store.read("fresh", "clicks").collect()] == [1]
