@@ -9,7 +9,7 @@ rewritten by :mod:`rakam_api_spark.query_service` into a view over
 incremental consumer polls instead of re-reading snapshots.
 
 The gated query below exercises the FULL path end-to-end: a
-transaction-logged collection is built from the sf_dir ``orders``
+collection is built from the sf_dir ``orders``
 table in three deterministic commits (``o_orderkey % 4`` slices:
 {0,1} → v1, {2} → v2, {3} → v3), then the TVF is queried THROUGH the
 query service for the inclusive commit range [2, 3].  The DuckDB
@@ -47,12 +47,7 @@ def _cdf_warehouse(spark: SparkSession, sf_dir: str) -> str:
     warehouse = tempfile.mkdtemp(prefix="rakam_cdf_wh_")
     ms = Metastore(warehouse)
     ms.create_project("cdfp")
-    store = EventStore(spark, ms)
-    # the maintenance lock file lives in the project directory, which
-    # only materializes on first ingest — create it for the direct path
-    os.makedirs(os.path.join(warehouse, "cdfp"), exist_ok=True)
-    store.enable_txn("cdfp", "orders")
-    txn = store.txn_table("cdfp", "orders")
+    txn = EventStore(spark, ms).txn_table("cdfp", "orders")
     orders = load_table(spark, sf_dir, "orders")
     slices = (
         orders.where((F.col("o_orderkey") % 4) < 2),
@@ -163,8 +158,6 @@ def _mv_warehouse(spark: SparkSession, sf_dir: str) -> str:
     ms = Metastore(warehouse)
     ms.create_project("mvp")
     store = EventStore(spark, ms)
-    os.makedirs(os.path.join(warehouse, "mvp"), exist_ok=True)
-    store.enable_txn("mvp", "orders")
     txn = store.txn_table("mvp", "orders")
     # keep the fixture to registerable column types (the metastore's
     # ingest type system has no NTZ timestamp; the view needs none)

@@ -1372,6 +1372,13 @@ def _hamming_band_pairs(
     — the simhash banding pattern (dedup.py) applied to any
     perceptual-hash column.
 
+    PRECONDITION: ``hashed`` holds ONE hash row per asset.  The
+    candidate pairs are de-duplicated only after the hamming gate,
+    which is sound because an asset pair then determines its hash
+    pair; a frame with several hashes per asset would collapse pairs
+    that collide under different hash combinations at equal hamming
+    distance.
+
     RECALL (pigeonhole): a pair at hamming distance ≤ bands-1 cannot
     flip a bit in every band, so it ALWAYS collides on ≥1 band —
     recall is guaranteed, not probabilistic, whenever

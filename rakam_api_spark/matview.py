@@ -243,8 +243,7 @@ def consumption_spec(df: DataFrame) -> dict:
 
 class MaterializedViewService:
     """Create / refresh / drop materialized views over a project's
-    transaction-logged collections (see module docstring for the
-    refresh contract)."""
+    collections (see module docstring for the refresh contract)."""
 
     def __init__(self, spark: SparkSession, store):
         self.spark = spark
@@ -376,11 +375,6 @@ class MaterializedViewService:
         for coll in bases:
             if coll not in known:
                 raise ValueError(f"unknown collection: {coll}")
-            if not self.store.txn_mode(project, coll):
-                raise ValueError(
-                    f"{coll} is not transaction-logged; enable_txn first — "
-                    "view staleness/increments are commit-log facts"
-                )
         # crash idempotency: a <name>.txn directory with NO meta file
         # is an orphan from a create (or drop) that died between the
         # data write and the meta write — re-running create must not

@@ -40,7 +40,7 @@ eager analysis (metadata-priced); execution always runs UNLOCKED,
 so a long analytical query never blocks other callers.
 
 Time travel: ``execute(as_of={collection: version})`` resolves a
-transaction-logged collection's view to its commit-log snapshot at
+collection's view to its commit-log snapshot at
 that version (``history()`` lists them) — the lakehouse AS OF read,
 served from the same manifest ``TxnTable.read(version=)`` uses
 everywhere else.  Snapshot resolution is metadata-only; the data
@@ -229,14 +229,10 @@ class QueryService:
         a successful ``execute`` result is reused for identical
         (project, sql, max_rows) calls while BOTH hold — (a) the
         entry is younger than the TTL and (b) the project's
-        dependency signature is unchanged.  The signature is EXACT
-        for transaction-logged collections (the txn version) and for
-        compactions of plain collections (the versioned directory
-        path + its mtime); plain-directory APPENDS don't bump the
-        top directory's mtime, so for those the TTL alone bounds the
-        staleness window — the same freshness contract as the
-        reference's 1-minute metastore cache
-        (rakam-postgresql/.../PostgresqlMetastore.java:50-63).
+        dependency signature is unchanged.  The signature is EXACT:
+        every collection's commit-log version (the TTL still bounds
+        an entry's age — the reference's metastore cache holds
+        entries 1 minute, rakam-postgresql/.../PostgresqlMetastore.java:50-63).
         Cached hits carry ``properties["cached"] = True``."""
         self.spark = spark
         self.store = store
@@ -395,7 +391,7 @@ class QueryService:
         them); an EMPTY list is a proven contradiction (``col = 'a'
         AND col IN ('b')``) and prunes every file.
 
-        Applies to every transaction-logged collection: equality uses
+        Applies to every collection: equality uses
         blooms AND min/max, ranges use min/max — a column without
         stats/blooms is simply never pruned on (live_files keeps it).
 
@@ -429,10 +425,9 @@ class QueryService:
         """
         import datetime as _dt
 
-        txn_colls: dict[str, str] = {}  # lowercase name -> real name
-        for coll in self.store.metastore.collections(project):
-            if self.store.txn_mode(project, coll):
-                txn_colls[coll.lower()] = coll
+        txn_colls = {  # lowercase name -> real name
+            coll.lower(): coll for coll in self.store.metastore.collections(project)
+        }
         if not txn_colls:
             return {}
         try:
@@ -717,21 +712,14 @@ class QueryService:
     def _validate_as_of(
         self, project: str, as_of: dict[str, int] | None
     ) -> QueryError | None:
-        """Time travel is only meaningful where a commit log proves
-        what each version contained: every ``as_of`` key must be a
-        transaction-logged collection and every version must exist."""
+        """Every ``as_of`` key must be a known collection and every
+        version must exist in its commit log."""
         if not as_of:
             return None
         known = set(self.store.metastore.collections(project))
         for coll, v in as_of.items():
             if coll not in known:
                 return QueryError(f"unknown collection {coll!r}", errorCode=42704)
-            if not self.store.txn_mode(project, coll):
-                return QueryError(
-                    f"time travel requires transaction-logged storage; "
-                    f"{coll!r} is a plain collection (enable_txn first)",
-                    errorCode=0,
-                )
             current = self.store.txn_table(project, coll).version()
             if not isinstance(v, int) or v < 0 or v > current:
                 return QueryError(
@@ -748,18 +736,13 @@ class QueryService:
         since: int | None = None,
         limit: int | None = None,
     ) -> list[dict]:
-        """The commit history of a transaction-logged collection —
-        one dict per version (op, writer, counts), the reference
-        point for picking an ``as_of`` version.  Raises ValueError
-        for plain collections.  ``since``/``limit`` bound the listing
+        """The commit history of a collection — one dict per version
+        (op, writer, counts), the reference point for picking an
+        ``as_of`` version.  ``since``/``limit`` bound the listing
         to the recent tail (cost is O(records returned) commit-file
         opens — a month of per-epoch commits must not mean ~86k opens
         per call, VERDICT r9 What's wrong #3)."""
-        if not self.store.txn_mode(project, collection):
-            raise ValueError(
-                f"{collection!r} is not transaction-logged; no history"
-            )
-        txn = self.store.txn_table(project, collection)
+        txn = self.store.existing_txn_table(project, collection)
         out = []
         for rec in txn.history(since=since, limit=limit):
             out.append(
@@ -849,7 +832,7 @@ class QueryService:
         TVF; the engine-side feed is ``TxnTable.changes``,
         txnlog.py).  Version arguments are INCLUSIVE commit numbers.
         Returns the rewritten statement plus the views to register;
-        raises ``ValueError`` for non-txn collections or an
+        raises ``ValueError`` for an unknown collection or an
         inverted/zero version range (surfaced as a QueryError by
         ``execute``).  Matches inside string literals / quoted
         identifiers are left untouched."""
@@ -882,13 +865,7 @@ class QueryService:
             else:
                 # timestamp form: (as-of start, as-of end] via the
                 # commit-time binary search (O(log commits) metadata)
-                if not self.store.txn_mode(project, coll):
-                    raise ValueError(
-                        f"{project}.{coll} is not transaction-logged; "
-                        "enable_txn first — the change feed is derived "
-                        "from commit history"
-                    )
-                txn = self.store.txn_table(project, coll)
+                txn = self.store.existing_txn_table(project, coll)
                 frm = (
                     txn.version_at(_tvf_timestamp(a1))
                     if not a1.isdigit()
@@ -920,7 +897,7 @@ class QueryService:
 
             name = f"__changes_{coll}_{_tag(a1)}_{_tag(a2)}"
             if name not in extra:
-                # store.changes validates txn mode and version bounds
+                # store.changes validates the collection and version bounds
                 extra[name] = self.store.changes(project, coll, frm, v2)
             out.append(sql[cursor : m.start()])
             out.append(name)
@@ -937,8 +914,8 @@ class QueryService:
         time, file/row deltas, and the idempotent-writer transaction
         id).  Commit records are driver-side JSON, so the frame is
         built on the driver; ``last_n`` bounds the metadata read to
-        the recent tail.  Raises ``ValueError`` for non-txn
-        collections (surfaced as a QueryError by ``execute``)."""
+        the recent tail.  Raises ``ValueError`` for an unknown
+        collection (surfaced as a QueryError by ``execute``)."""
         import datetime as _dt
 
         matches = [
@@ -956,17 +933,12 @@ class QueryService:
         for m in matches:
             coll = m.group(1)
             last_n = int(m.group(2)) if m.group(2) is not None else None
-            if not self.store.txn_mode(project, coll):
-                raise ValueError(
-                    f"{project}.{coll} is not transaction-logged; "
-                    "enable_txn first — table_history reads the commit log"
-                )
             # 'all' ONLY for the omitted form: `last_n or 'all'` would
             # alias table_history('c', 0) onto the unbounded view name
             # (ADVICE r15) — 0 is a real, distinct (empty) history.
             name = f"__history_{coll}_{'all' if last_n is None else last_n}"
             if name not in extra:
-                recs = self.store.txn_table(project, coll).history(
+                recs = self.store.existing_txn_table(project, coll).history(
                     limit=last_n
                 )
                 rows = []
@@ -1073,32 +1045,15 @@ class QueryService:
         self, project: str, rels: frozenset[str] | None = None
     ) -> tuple:
         """Freshness signature of everything the project's views can
-        read: txn versions are exact; plain collections contribute
-        their CURRENT versioned directory path + mtime (captures
-        compaction pointer swaps; appends are TTL-bounded, see
-        ``__init__``).  With ``rels`` given, only the REFERENCED
+        read: each collection's commit-log version.  With ``rels`` given, only the REFERENCED
         materialized views resolve their txn logs (ADVICE r14:
         signature cost must not grow with views a statement never
         touches); the cache compares signatures computed from the
         same statement, so the narrowing is stable per cache key."""
-        import os
-
-        sig = []
-        for coll in sorted(self.store.metastore.collections(project)):
-            try:
-                if self.store.txn_mode(project, coll):
-                    sig.append(
-                        (coll, "txn", self.store.txn_table(project, coll).version())
-                    )
-                    continue
-            except Exception:
-                pass
-            path = self.store._table_path(project, coll)
-            try:
-                st = os.stat(path)
-                sig.append((coll, "dir", path, st.st_mtime_ns))
-            except OSError:
-                sig.append((coll, "missing"))
+        sig = [
+            (coll, "txn", self.store.txn_table(project, coll).version())
+            for coll in sorted(self.store.metastore.collections(project))
+        ]
         # materialized views refresh out-of-band: their txn versions
         # join the signature so a refresh invalidates cached queries
         from .matview import MaterializedViewService
@@ -1180,24 +1135,20 @@ class QueryService:
         self, project: str, timestamp: float
     ) -> tuple[dict[str, int] | None, QueryError | None]:
         """TIMESTAMP AS OF for the whole project: resolve EVERY
-        transaction-logged collection to its version at ``timestamp``
+        collection to its version at ``timestamp``
         (``TxnTable.version_at`` — O(log commits) each).  Refused when
-        the project has no txn collection at all (the travel would
-        silently read current data)."""
-        out: dict[str, int] = {}
+        the project has no collection at all."""
         try:
             colls = self.store.metastore.collections(project)
         except Exception:
             colls = []
-        for coll in colls:
-            if self.store.txn_mode(project, coll):
-                out[coll] = self.store.txn_table(project, coll).version_at(
-                    timestamp
-                )
+        out = {
+            coll: self.store.txn_table(project, coll).version_at(timestamp)
+            for coll in colls
+        }
         if not out:
             return None, QueryError(
-                "timestamp travel requires at least one transaction-logged "
-                "collection in the project (enable_txn first)",
+                f"timestamp travel: project {project!r} has no collections",
                 errorCode=0,
             )
         return out, None
@@ -1217,13 +1168,12 @@ class QueryService:
 
         ``as_of`` maps collection → txn version for TIME TRAVEL: the
         named collections resolve to their commit-log snapshot at
-        that version (``history()`` lists the versions); only
-        transaction-logged collections accept it.  A traveled
+        that version (``history()`` lists the versions).  A traveled
         collection's ``__rollup`` view is not registered — current
         cells beside a historical base would mix versions.
 
-        ``as_of_timestamp`` is the wall-clock form: EVERY txn
-        collection in the project travels to its version at that
+        ``as_of_timestamp`` is the wall-clock form: EVERY collection
+        in the project travels to its version at that
         instant ("query the warehouse as of yesterday 09:00") —
         mutually exclusive with ``as_of``."""
         if as_of_timestamp is not None:

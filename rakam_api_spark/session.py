@@ -31,20 +31,6 @@ _RUNTIME_CONFS = {
     # tz-proof comparisons against external engines.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # AQE coalescing's parallelism-first target is floored at
-    # minPartitionSize; the floor binds exactly when post-shuffle
-    # partitions are tiny.  A 16k floor was tried as a parallelism
-    # fix for single-core post-shuffle stages, but once the scan
-    # respread (tables._maybe_respread) provides base parallelism the
-    # low floor only multiplies task-scheduling overhead on
-    # shuffle-heavy self-joins: same-session 4-run A/B at sf0.1,
-    # 16k vs 1m (Spark default), media_video_dedup warm 6.5-11.5 s
-    # vs 4.5-4.7 s, dedup_minhash_lsh 5.2-5.7 s vs 2.2-2.8 s, while
-    # the respread winners (q1, lang_profile_confusion) are
-    # indistinguishable.  Kept env-overridable for cluster tuning.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION", "1m"
-    ),
 }
 
 

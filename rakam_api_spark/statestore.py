@@ -7,9 +7,8 @@ through this one interface:
   (streaming/job.py),
 - per-epoch stream commit markers (streaming/job.py),
 - the user-table bucket swaps (users.py ``_merge_partitions``),
-- (the event-table ``TABLE_VERSION_*`` pointer lives in the
-  metastore's config JSON, which is itself an atomic
-  ``os.replace`` — same contract, different file).
+- (event tables keep no pointer here: each is a commit log,
+  txnlog.py, whose versions are claimed by O_EXCL commit files).
 
 The reference keeps the equivalent state in MySQL/DynamoDB
 (rakam-aws/.../kinesis checkpointing; MysqlMetastore); a Spark

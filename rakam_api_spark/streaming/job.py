@@ -348,8 +348,8 @@ class StreamingIngest:
                     # rollup maintenance never re-executes the batch
                     # lineage for a distinct() pass
                     observe_months=coll in self.rollup_specs,
-                    # txn collections: per-(stream, collection) Delta-
-                    # style transaction identifier — a mid-epoch crash
+                    # per-(stream, collection) Delta-style
+                    # transaction identifier — a mid-epoch crash
                     # replay re-runs the epoch, but collections whose
                     # append ALREADY landed skip (exactly-once rows,
                     # closing the partial-epoch double-append window

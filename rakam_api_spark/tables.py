@@ -132,11 +132,7 @@ def _maybe_respread(
     AND the table is big enough for the (tiny) exchange to pay for
     itself, hash-repartition on the table's dominant key to the
     default parallelism.  On a real deployment (many files / many
-    row groups) the condition is false and NO exchange is added; the
-    override env pins the behavior either way (off/on)."""
-    mode = os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "auto")
-    if mode == "off":
-        return df
+    row groups) the condition is false and NO exchange is added."""
     try:
         # sessions without a sparkContext (Spark Connect, mocks) skip
         # the respread instead of failing every load (ADVICE r16) —
@@ -144,13 +140,12 @@ def _maybe_respread(
         para = spark.sparkContext.defaultParallelism
     except Exception:
         return df
-    if mode != "on":
-        est = _scan_split_estimate(path)
-        if est is None:
-            return df
-        splits, total = est
-        if total < _REPART_MIN_BYTES or splits >= max(1, para // 2):
-            return df
+    est = _scan_split_estimate(path)
+    if est is None:
+        return df
+    splits, total = est
+    if total < _REPART_MIN_BYTES or splits >= max(1, para // 2):
+        return df
     key = _SPREAD_KEYS.get(name)
     if key is None or key not in df.columns:
         return df

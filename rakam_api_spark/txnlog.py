@@ -1,5 +1,5 @@
 """Cross-process atomic commit protocol for the parquet warehouse —
-the transaction-log table format the plain directory layout lacks
+the transaction-log table format every event collection is stored in
 (VERDICT r6 "What's missing" #2: concurrent multi-writer needs
 Delta/Iceberg or documented single-writer orchestration; this module
 is the in-repo lakehouse answer, built on the same PUBLIC design the

@@ -76,7 +76,6 @@ _SLOW = {
     "test_query_service.py::test_table_history_zero_not_aliased_to_unbounded",
     "test_query_service.py::test_time_travel_reads_the_requested_snapshot",
     "test_query_service.py::test_timestamp_pruning_refused_under_non_utc_session",
-    "test_rollup_staleness.py::test_legacy_compact_rides_refresh_and_plan_stays_idempotent",
     "test_rollup_staleness.py::test_txn_append_into_rolled_month_flags_exactly_that_month",
     "test_rollup_staleness.py::test_txn_verified_months_advance_to_scan_horizon",
     "test_search_index.py::TestSearchIndex::test_append_updates_results_and_stats",

@@ -96,10 +96,8 @@ def test_store_level_change_feed(spark, warehouse):
     )
     store = collector.store
     collector.collect("proj", "ev", {"x": 1, "_time": "2024-01-05 09:00:00"})
-    with pytest.raises(ValueError):
-        store.changes("proj", "ev", 0)  # legacy mode: no commit history
-    store.enable_txn("proj", "ev")
     v0 = store.txn_table("proj", "ev").version()
+    assert [r["x"] for r in store.changes("proj", "ev", 0).collect()] == [1]
     collector.collect("proj", "ev", {"x": 2, "_time": "2024-01-06 09:00:00"})
     feed = store.changes("proj", "ev", v0).collect()
     assert [(r["x"], r["_change_type"]) for r in feed] == [(2, "insert")]

@@ -219,11 +219,13 @@ def test_localbus_stream_epoch_maintenance_bounds_small_files(spark, warehouse, 
     stats = {r["month"]: r for r in collector.store.table_stats("proj", "clicks").collect()}
     n_files = stats["2024-05"]["n_files"]
     assert n_files <= 4 + 5, f"small files unbounded: {n_files}"
-    # nothing lost across pointer swaps
+    # nothing lost across compaction commits
     xs = sorted(r["x"] for r in collector.store.read("proj", "clicks").collect())
     assert xs == list(range(44))
-    # the swap left exactly one live versioned dir (old versions gone)
-    base = collector.store._base_path("proj", "clicks")
-    parent = os.path.dirname(base)
-    vdirs = [d for d in os.listdir(parent) if d.startswith(os.path.basename(base) + ".v")]
-    assert len(vdirs) <= 1
+    # compaction ran through the log: its commits retired the small
+    # files, and every file the log lists as live is on disk
+    txn = collector.store.txn_table("proj", "clicks")
+    assert "compact" in [h["op"] for h in txn.history()]
+    live = txn.live_files()
+    assert len(live) == n_files
+    assert all(os.path.exists(os.path.join(txn.path, f)) for f in live)

@@ -31,7 +31,6 @@ def env(spark, warehouse):
         collector.collect(
             "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"}
         )
-    store.enable_txn("proj", "ev")
     return collector, store, MaterializedViewService(spark, store)
 
 
@@ -531,7 +530,6 @@ def test_multibase_full_refresh_applies_when_non_max_base_advances(spark, env):
     # second base with a much LOWER version than ev's
     collector.collect("proj", "dim", {"uid": "u0", "grp": "a", "_time": "2024-01-05 09:00:00"})
     collector.collect("proj", "dim", {"uid": "u1", "grp": "a", "_time": "2024-01-05 09:00:00"})
-    store.enable_txn("proj", "dim")
     mv.create(
         "proj",
         "joined",

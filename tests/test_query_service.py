@@ -2,6 +2,7 @@
 QueryResult/QueryError execution contract over per-collection views
 (rakam-spi/.../report/QueryResult.java, QueryError.java)."""
 
+import os
 import sys
 
 import pytest
@@ -183,10 +184,9 @@ def test_execute_export_formats(service):
 
 
 def test_query_service_reads_txn_collections(service):
-    """Ad-hoc SQL must see a txn-logged collection's snapshot: after
-    enable_txn the store's read path resolves live files from the
-    commit log, and the view the service registers is that snapshot."""
-    service.store.enable_txn("proj", "pageview")
+    """Ad-hoc SQL must see a collection's logged snapshot: the store's
+    read path resolves live files from the commit log, and the view
+    the service registers is that snapshot."""
     res = service.execute("proj", "SELECT COUNT(*) AS n FROM pageview")
     assert not res.failed, res.error
     assert res.result[0][0] == 30
@@ -341,7 +341,7 @@ def test_concurrent_queries_do_not_serialize(service):
 def test_result_cache_hit_ttl_and_txn_invalidation(service):
     """Query-result cache: identical (project, sql, max_rows) calls
     reuse the stored result inside the TTL while the dependency
-    signature holds; a committed write to a txn collection bumps the
+    signature holds; a committed write to a collection bumps the
     signature and invalidates; TTL expiry invalidates; disabled by
     default."""
     import time as _t
@@ -362,11 +362,7 @@ def test_result_cache_hit_ttl_and_txn_invalidation(service):
     assert r2.properties.get("cached") is True
     assert r2.result == r1.result and r2.metadata == r1.metadata
 
-    # a committed write to a TXN collection invalidates exactly
-    service.store.enable_txn("proj", "pageview")
-    r3 = cached_svc.execute("proj", sql)  # repopulate under txn signature
-    assert "cached" not in r3.properties
-    assert cached_svc.execute("proj", sql).properties.get("cached") is True
+    # a committed write invalidates exactly
     from rakam_api_spark.api import EventCollector
     from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
 
@@ -406,7 +402,6 @@ def test_time_travel_reads_the_requested_snapshot(service):
     snapshot: rows appended after that version are invisible, the
     latest version matches the current read, and history() lists the
     versions a caller can travel to."""
-    service.store.enable_txn("proj", "pageview")
     v1 = service.store.txn_table("proj", "pageview").version()
     collector = EventCollector(
         service.spark,
@@ -433,13 +428,6 @@ def test_time_travel_reads_the_requested_snapshot(service):
 
 
 def test_time_travel_validation_and_rollup_isolation(service):
-    # plain collection: refused with a structured error, not an exception
-    res = service.execute(
-        "proj", "SELECT COUNT(*) FROM purchase", as_of={"purchase": 1}
-    )
-    assert res.failed and "transaction-logged" in res.error.message
-
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     # out-of-range version: refused
     res = service.execute(
@@ -451,9 +439,6 @@ def test_time_travel_validation_and_rollup_isolation(service):
         "proj", "SELECT 1", as_of={"nope": 1}
     )
     assert res.failed and "unknown collection" in res.error.message
-    # history of a plain collection: refused
-    with pytest.raises(ValueError):
-        service.history("proj", "purchase")
 
     # a traveled collection's __rollup view is NOT registered (current
     # cells beside a historical base would mix versions)
@@ -468,8 +453,40 @@ def test_time_travel_validation_and_rollup_isolation(service):
     assert res.failed  # TABLE_OR_VIEW_NOT_FOUND under time travel
 
 
+def test_collect_alone_gives_time_travel_history_and_feed(service):
+    """Every collection is transaction-logged from its first write:
+    ``purchase``, written by ``collect`` and never passed to
+    ``enable_txn``, travels with ``as_of``, lists its history, feeds
+    ``table_changes`` and prunes point lookups."""
+    store = service.store
+    v1 = store.txn_table("proj", "purchase").version()
+    assert v1 >= 1
+    collector = EventCollector(
+        service.spark, store.metastore, pipeline=EnrichmentPipeline([TimestampMapper()])
+    )
+    collector.collect(
+        "proj", "purchase", {"user_id": "u9", "amount": 1.0, "_time": "2024-01-05 12:00:00"}
+    )
+    sql = "SELECT COUNT(*) FROM purchase"
+    res = service.execute("proj", sql, as_of={"purchase": v1})
+    assert not res.failed and res.result[0][0] == 30
+    assert service.execute("proj", sql).result[0][0] == 31
+
+    hist = service.history("proj", "purchase")
+    assert [h["version"] for h in hist] == list(range(1, v1 + 2))
+    assert hist[-1]["op"] == "append" and hist[-1]["n_added"] == 1
+
+    res = service.execute(
+        "proj", f"SELECT user_id, _change_type FROM table_changes('purchase', {v1 + 1})"
+    )
+    assert not res.failed
+    assert [tuple(r) for r in res.result] == [("u9", "insert")]
+
+    hits = store.read("proj", "purchase", equals={"user_id": "u9"})
+    assert [r["amount"] for r in hits.where("user_id = 'u9'").collect()] == [1.0]
+
+
 def test_time_travel_results_cached_per_version(service):
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     svc = QueryService(
         service.spark, service.store, users=service.users, cache_ttl_seconds=60
@@ -525,7 +542,6 @@ def test_export_and_explain_at_version(service):
     """VERDICT r9 Missing #3: as_of is plumbed through execute_export
     and explain.  An export at a pinned version is byte-stable across
     a subsequent append; explain validates as_of like execute."""
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     sql = "SELECT event_type, COUNT(*) AS n FROM pageview GROUP BY event_type ORDER BY event_type"
     before = service.execute_export("proj", sql, fmt="csv", as_of={"pageview": v})
@@ -547,14 +563,13 @@ def test_export_and_explain_at_version(service):
     assert live != before  # the un-pinned export sees the append
     with pytest.raises(ValueError, match="out of range"):
         service.execute_export("proj", sql, as_of={"pageview": v + 99})
-    with pytest.raises(ValueError, match="transaction-logged"):
-        service.explain("proj", sql, as_of={"purchase": 1})
+    with pytest.raises(ValueError, match="unknown collection"):
+        service.explain("proj", sql, as_of={"nope": 1})
 
 
 def test_history_tail_is_bounded(service):
     """QueryService.history(since=, limit=) serves the recent tail
     with O(returned) commit-file opens (VERDICT r9 What's wrong #3)."""
-    service.store.enable_txn("proj", "pageview")
     txn = service.store.txn_table("proj", "pageview")
     for i in range(20):
         txn.commit(add=[{"path": f"x{i}.parquet", "rows": 0, "partition": None}])
@@ -575,7 +590,6 @@ def test_versioned_read_out_of_range_is_descriptive(service):
     """ADVICE r9: store.read(version=N) and export_manifest validate
     the version range up front — a descriptive ValueError, never a
     raw FileNotFoundError from a missing commit file."""
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     with pytest.raises(ValueError, match="out of range"):
         service.store.read("proj", "pageview", version=v + 7)
@@ -589,17 +603,16 @@ def test_versioned_read_out_of_range_is_descriptive(service):
 
 
 def test_execute_as_of_timestamp(service):
-    """as_of_timestamp travels EVERY txn collection to its version at
+    """as_of_timestamp travels EVERY collection to its version at
     the wall-clock instant; current reads are unaffected, the cache
     keys per resolved version, and misuse is a structured error."""
     import time as _time
 
-    # before any txn collection exists: structured refusal
+    # before the first commit: the empty pre-history
     pre = service.execute(
-        "proj", "SELECT COUNT(*) AS n FROM pageview", as_of_timestamp=_time.time()
+        "proj", "SELECT COUNT(*) AS n FROM pageview", as_of_timestamp=0.0
     )
-    assert pre.failed and "transaction-logged" in pre.error.message
-    service.store.enable_txn("proj", "pageview")
+    assert not pre.failed and pre.result == [[0]]
     _time.sleep(0.02)
     mid = _time.time()
     _time.sleep(0.02)
@@ -637,19 +650,10 @@ def test_point_lookup_sql_prunes_files_from_blooms(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
-    for i in range(60):
-        collector.collect(
-            "proj",
-            "ev",
-            {
-                "uid": f"user-{i}",
-                "x": i,
-                "_time": f"2024-0{i % 3 + 1}-05 09:00:00",
-            },
-        )
-    store.enable_txn("proj", "ev", bloom_cols=["uid"])
-    # several bloomed appends so there is something to prune
-    for i in range(60, 120):
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", "ev", ["uid"])
+    # many bloomed appends so there is something to prune
+    for i in range(120):
         collector.collect(
             "proj",
             "ev",
@@ -720,8 +724,9 @@ def test_in_list_and_range_predicates_prune_files(spark, warehouse):
                 {"uid": f"user-{i}", "x": i, "_time": "2024-01-05 09:00:00"},
             )
 
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", "ev", ["uid"])
     batch(0, 40)
-    store.enable_txn("proj", "ev", bloom_cols=["uid"])
     batch(40, 80)
     batch(80, 120)
     svc = QueryService(spark, store)
@@ -779,10 +784,11 @@ def test_time_travel_combines_with_point_lookup_pruning(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", "ev", ["uid"])
     collector.collect(
         "proj", "ev", {"uid": "user-1", "x": 1, "_time": "2024-01-05 09:00:00"}
     )
-    store.enable_txn("proj", "ev", bloom_cols=["uid"])
     collector.collect(
         "proj", "ev", {"uid": "user-2", "x": 2, "_time": "2024-01-06 09:00:00"}
     )
@@ -829,13 +835,14 @@ def test_pruning_handles_cte_and_subquery_shapes(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", "ev", ["uid"])
     for i in range(60):
         collector.collect(
             "proj",
             "ev",
             {"uid": f"user-{i}", "x": i, "_time": "2024-01-05 09:00:00"},
         )
-    store.enable_txn("proj", "ev", bloom_cols=["uid"])
     for i in range(60, 120):
         collector.collect(
             "proj",
@@ -866,19 +873,17 @@ def test_pruning_handles_cte_and_subquery_shapes(spark, warehouse):
 
 
 def _pruning_store(spark, warehouse, rows, bloom_cols, coll="ev"):
-    """Txn-logged collection from ``rows`` (one collect per row →
-    many files), bloomed on ``bloom_cols`` after the first half so
-    both bloomed and pre-bloom files exist."""
+    """Collection from ``rows`` (one collect per row → one file per
+    row), every file bloomed on ``bloom_cols``, so a predicate's
+    verdict rests on the per-file blooms and min/max stats."""
     ms = Metastore(warehouse)
     collector = EventCollector(
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
-    half = len(rows) // 2
-    for r in rows[:half]:
-        collector.collect("proj", coll, dict(r))
-    store.enable_txn("proj", coll, bloom_cols=bloom_cols)
-    for r in rows[half:]:
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", coll, bloom_cols)
+    for r in rows:
         collector.collect("proj", coll, dict(r))
     return store
 
@@ -1204,13 +1209,10 @@ def test_external_tz_adjusted_parquet_prunes_safely(spark, warehouse, tmp_path):
     )
     store = collector.store
     ext = spark.read.parquet(path)
-    # ingest in four slices -> four files, blooms enabled after two
-    for lo, hi in ((0, 4), (4, 8)):
-        collector.bulk(
-            "proj", "ext", ext.where((F.col("x") >= lo) & (F.col("x") < hi))
-        )
-    store.enable_txn("proj", "ext", bloom_cols=["t"])
-    for lo, hi in ((8, 12), (12, 16)):
+    # ingest in four slices -> four bloomed files
+    ms.create_project("proj")
+    store.set_bloom_cols("proj", "ext", ["t"])
+    for lo, hi in ((0, 4), (4, 8), (8, 12), (12, 16)):
         collector.bulk(
             "proj", "ext", ext.where((F.col("x") >= lo) & (F.col("x") < hi))
         )
@@ -1263,11 +1265,16 @@ def _cdf_service(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
-    for i in range(6):
-        collector.collect(
-            "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"}
-        )
-    store.enable_txn("proj", "ev")          # v1: migration commit
+    collector.batch(                        # v1: one six-row commit
+        "proj",
+        [
+            {
+                "collection": "ev",
+                "properties": {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"},
+            }
+            for i in range(6)
+        ],
+    )
     for i in range(6, 9):
         collector.collect(                  # v2, v3, v4: one append each
             "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-02-05 09:00:00"}
@@ -1307,10 +1314,9 @@ def test_table_changes_tvf_validation(spark, warehouse):
     # start must be >= 1 (inclusive commit numbers)
     res = svc.execute("proj", "SELECT * FROM table_changes('ev', 0, 2)")
     assert res.error is not None
-    # non-txn collections have no commit history to diff
-    svcp = svc  # same project also has no such collection at all
-    res = svcp.execute("proj", "SELECT * FROM table_changes('nope', 1)")
-    assert res.error is not None
+    # an unknown collection has no commit history to diff
+    res = svc.execute("proj", "SELECT * FROM table_changes('nope', 1)")
+    assert res.error is not None and "unknown collection" in res.error.message
     # a literal mentioning the TVF is NOT rewritten
     res = svc.execute("proj", "SELECT 'table_changes(''ev'', 1)' AS s")
     assert res.error is None and res.result == [["table_changes('ev', 1)"]]
@@ -1395,9 +1401,15 @@ def test_table_history_tvf(spark, warehouse):
         "WHERE commit_ts > TIMESTAMP '2000-01-01 00:00:00'",
     )
     assert res3.error is None and res3.result == [[4]]
-    # non-txn collection -> structured error
+    # unknown collection -> structured error
     res4 = svc.execute("proj", "SELECT * FROM table_history('nope')")
-    assert res4.error is not None and "transaction-logged" in res4.error.message
+    assert res4.error is not None and "unknown collection" in res4.error.message
+    with pytest.raises(ValueError, match="unknown collection"):
+        svc.history("proj", "nope")
+    with pytest.raises(FileNotFoundError):
+        svc.store.read("proj", "nope")
+    # refusing a name writes nothing to the warehouse
+    assert not os.path.exists(svc.store._base_path("proj", "nope") + ".txn")
     # literal mention untouched
     res5 = svc.execute("proj", "SELECT 'table_history(''ev'')' AS s")
     assert res5.error is None and res5.result == [["table_history('ev')"]]

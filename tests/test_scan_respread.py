@@ -61,11 +61,3 @@ def test_multi_file_downstream_repartition_is_single_exchange(spark, multi_rg_di
     df = load_table(spark, multi_rg_dir, "lineitem").repartition(8, "l_suppkey")
     assert _n_repartitions(df) == 1
 
-
-def test_respread_env_off_disables(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_REPARTITION", "off")
-    # fresh key so the memo can't serve the already-respread frame
-    from rakam_api_spark import tables as T
-
-    df = T._load_table(spark, "/root/testdata/sf0.01", "lineitem")
-    assert _n_repartitions(df) == 0

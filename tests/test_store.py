@@ -8,13 +8,6 @@ from rakam_api_spark.catalog import Metastore
 from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
 
 
-def _n_parquet_files(path):
-    n = 0
-    for _, _, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
 def test_compact_collapses_files_preserves_rows(spark, warehouse):
     ms = Metastore(warehouse)
     collector = EventCollector(spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()]))
@@ -27,28 +20,29 @@ def test_compact_collapses_files_preserves_rows(spark, warehouse):
             {"x": i, "_time": f"{month}-0{i % 5 + 1} 10:00:00"},
         )
     store = collector.store
-    path = store._table_path("proj", "clicks")
-    before_files = _n_parquet_files(path)
+    txn = store.txn_table("proj", "clicks")
+    v_before = txn.version()
     before = sorted(r["x"] for r in store.read("proj", "clicks").collect())
-    assert before_files >= 6
+    assert len(txn.live_files()) >= 6
 
     n_files = store.compact("proj", "clicks")
     assert n_files == 2  # one file per month partition
     after = sorted(r["x"] for r in store.read("proj", "clicks").collect())
     assert after == before
-    # pointer swap: a NEW versioned dir is live, the old dir is gone,
-    # and the metastore pointer names the new version (crash-safe:
-    # the table path is never missing at rest)
-    new_path = store._table_path("proj", "clicks")
-    assert new_path != path and new_path.endswith(".v0")
-    assert not os.path.exists(path)
-    assert ms.get_config("proj", "TABLE_VERSION_clicks") == 0
+    # one commit swapped the snapshot: the log's live files are the
+    # compacted ones, and the pre-compaction snapshot stays readable
+    # (crash-safe: the table is never missing at rest)
+    assert txn.version() == v_before + 1
+    assert txn.history()[-1]["op"] == "compact"
+    assert len(txn.live_files()) == 2
+    assert sorted(r["x"] for r in store.read("proj", "clicks", version=v_before).collect()) == before
     # month partition layout intact (pruning still works)
-    months = {d for d in os.listdir(new_path) if d.startswith("_month=")}
+    months = {f.split("/")[0] for f in txn.live_files()}
     assert months == {"_month=2024-01", "_month=2024-02"}
-    # second compaction bumps the version and stays readable
+    # second compaction commits again and stays readable
     store.compact("proj", "clicks")
-    assert store._table_path("proj", "clicks").endswith(".v1")
+    assert txn.version() == v_before + 2
+    assert len(txn.live_files()) == 2
     assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == before
     assert store.collections_with_data("proj") == ["clicks"]
 
@@ -130,10 +124,8 @@ def test_rollup_publish_and_incremental_refresh(spark, warehouse):
     assert jan_files_after == jan_files_before
 
     # full rebuild drops rollup partitions for months that vanished
-    # from raw (retention delete): remove january raw, rebuild all
-    import shutil
-
-    shutil.rmtree(os.path.join(warehouse, "p", "ev", "_month=2024-01"))
+    # from raw (retention delete): expire january raw, rebuild all
+    assert store.expire_months("p", "ev", "2024-02") == ["2024-01"]
     store.publish_rollup("p", "ev")
     months_left = {r["_month"] for r in store.read_rollup("p", "ev").select("_month").distinct().collect()}
     assert months_left == {"2024-02"}
@@ -169,10 +161,10 @@ def test_erase_user_rewrites_without_rows(spark, warehouse):
     rest = store.read("proj", "clicks")
     assert rest.where("uid = 1").count() == 0
     assert rest.count() == 4
-    # versioned swap left a live table dir and the month layout intact
-    path = store._table_path("proj", "clicks")
-    assert ".v" in path
-    months = {d for d in os.listdir(path) if d.startswith("_month=")}
+    # one erase commit swapped the snapshot; the month layout is intact
+    txn = store.txn_table("proj", "clicks")
+    assert txn.history()[-1]["op"] == "erase"
+    months = {f.split("/")[0] for f in txn.live_files()}
     assert months == {"_month=2024-01", "_month=2024-02"}
 
 
@@ -230,10 +222,9 @@ def test_maintenance_plan_and_run(spark, warehouse):
     got = {(p["collection"], p["action"]): p["months"] for p in plan}
     assert got[("clicks", "expire")] == ["2023-10"]
     assert "2024-01" in got[("clicks", "compact")]
-    # 2024-02 is missing from the rollup; 2024-01 rides along because
-    # this plan's compaction will rewrite its file set (the refresh
-    # runs after the compact and records the post-compact signature)
-    assert got[("clicks", "rollup_refresh")] == ["2024-01", "2024-02"]
+    # 2024-02 is missing from the rollup; 2024-01's cells stay fresh:
+    # the commit log proves compaction content-preserving
+    assert got[("clicks", "rollup_refresh")] == ["2024-02"]
 
     done = store.run_maintenance("proj", plan)
     assert all("outcome" in p for p in done)

@@ -1,9 +1,12 @@
-"""EventStore's transaction-logged storage mode: legacy collections
-migrate in one commit, then every store lifecycle op (append, read,
-stats, maintenance compaction, TTL expiry, erase) routes through
-atomic TxnTable commits — the multi-writer-safe warehouse mode."""
+"""EventStore's transaction-logged storage: a plain parquet directory
+written before every collection was logged imports in one commit,
+and every store lifecycle op (append, read, stats, maintenance
+compaction, TTL expiry, erase) routes through atomic TxnTable
+commits — the multi-writer-safe warehouse layout."""
 
 import os
+
+import pytest
 
 from rakam_api_spark.api import EventCollector
 from rakam_api_spark.catalog import Metastore
@@ -18,19 +21,49 @@ def _collector(spark, warehouse):
 
 def test_enable_txn_migrates_and_routes_lifecycle(spark, warehouse):
     collector = _collector(spark, warehouse)
-    for i in range(4):
-        collector.collect(
-            "proj", "clicks", {"x": i, "_time": f"2024-01-0{i + 1} 09:00:00"}
-        )
     store = collector.store
-    before = sorted(r["x"] for r in store.read("proj", "clicks").collect())
+    # a plain month-partitioned directory, as written before every
+    # collection was logged, with its schema registered
+    from rakam_api_spark.types import FieldType
 
-    store.enable_txn("proj", "clicks")
-    assert store.txn_mode("proj", "clicks")
-    # migration preserved the data; the legacy directory is gone
-    assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == before
-    assert not os.path.exists(store._base_path("proj", "clicks"))
+    store.metastore.create_project("proj")
+    store.metastore.get_or_create_collection_fields(
+        "proj", "clicks", {"x": FieldType.LONG, "_time": FieldType.TIMESTAMP}
+    )
+    legacy = store._base_path("proj", "clicks")
+    plain = spark.createDataFrame(
+        [(i, f"2024-01-0{i + 1} 09:00:00") for i in range(4)], "x long, t string"
+    ).selectExpr("x", "to_timestamp(t) AS _time", "'2024-01' AS _month")
+    plain.write.partitionBy("_month").parquet(legacy)
+    # until imported, every access is refused loudly — never a read
+    # or an erase that silently misses the directory's rows
     assert store.collections_with_data("proj") == ["clicks"]
+    with pytest.raises(ValueError, match="enable_txn"):
+        store.read("proj", "clicks")
+    with pytest.raises(ValueError, match="enable_txn"):
+        store.erase_user("proj", "x", 1)
+    assert not os.path.exists(legacy + ".txn")
+
+    store.enable_txn("proj", "clicks", bloom_cols=["x"])
+    # the import preserved the data in one commit whose files carry
+    # blooms; the directory is gone
+    assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == [0, 1, 2, 3]
+    assert not os.path.exists(legacy)
+    txn = store.txn_table("proj", "clicks")
+    assert txn.version() == 1
+    ents = txn.state().values()
+    assert ents and all("x" in (e.get("blooms") or {}) for e in ents)
+    assert store.collections_with_data("proj") == ["clicks"]
+    # on a logged collection the importer is a no-op
+    store.enable_txn("proj", "clicks")
+    assert store.txn_table("proj", "clicks").version() == 1
+    # a crash between the import commit and the directory removal
+    # leaves the directory behind: the re-run removes it, commits nothing
+    plain.write.partitionBy("_month").parquet(legacy)
+    store.enable_txn("proj", "clicks")
+    assert not os.path.exists(legacy)
+    assert store.txn_table("proj", "clicks").version() == 1
+    assert store.read("proj", "clicks").count() == 4
 
     # appends now land as commits (one per micro-batch)
     v0 = store.txn_table("proj", "clicks").version()
@@ -61,6 +94,20 @@ def test_enable_txn_migrates_and_routes_lifecycle(spark, warehouse):
     assert dropped == ["2024-01"]
     assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == list(range(4, 10))
 
+    # a directory a pre-log compaction left at the version its
+    # TABLE_VERSION_<collection> pointer names imports the same way
+    store.metastore.get_or_create_collection_fields(
+        "proj", "taps", {"x": FieldType.LONG, "_time": FieldType.TIMESTAMP}
+    )
+    store.metastore.set_config("proj", "TABLE_VERSION_taps", 2)
+    plain.write.partitionBy("_month").parquet(store._base_path("proj", "taps") + ".v2")
+    with pytest.raises(ValueError, match="enable_txn"):
+        store.read("proj", "taps")
+    store.enable_txn("proj", "taps")
+    assert sorted(r["x"] for r in store.read("proj", "taps").collect()) == [0, 1, 2, 3]
+    assert not os.path.exists(store._base_path("proj", "taps") + ".v2")
+    assert store.collections_with_data("proj") == ["clicks", "taps"]
+
 
 def test_erase_user_on_txn_collection(spark, warehouse):
     collector = _collector(spark, warehouse)
@@ -71,7 +118,6 @@ def test_erase_user_on_txn_collection(spark, warehouse):
             {"_user": f"u{i % 2}", "x": i, "_time": f"2024-01-0{i + 1} 09:00:00"},
         )
     store = collector.store
-    store.enable_txn("proj", "ev")
     removed = store.erase_user("proj", "_user", "u1")
     assert removed == {"ev": 3}
     rows = store.read("proj", "ev").collect()
@@ -118,7 +164,6 @@ def test_streaming_ingest_into_txn_collection(spark, warehouse, tmp_path):
     collector = _collector(spark, warehouse)
     store = collector.store
     store.metastore.create_project("proj")
-    store.metastore.set_config("proj", "TXN_clicks", True)  # txn from birth
     ing = StreamingIngest(
         collector,
         "proj",
@@ -162,7 +207,6 @@ def test_store_export_manifest_external_read(spark, warehouse):
             "proj", "taps", {"x": i, "_time": f"2024-03-0{i + 1} 09:00:00"}
         )
     store = collector.store
-    store.enable_txn("proj", "taps")
     out = os.path.join(warehouse, "taps_snapshot.json")
     m = store.export_manifest("proj", "taps", out_path=out)
     assert m["version"] is not None and m["files"]
@@ -181,26 +225,22 @@ def test_store_export_manifest_external_read(spark, warehouse):
     assert xs == [0, 1, 2]  # the exported snapshot, not the live table
 
     # versioned export (time travel): the manifest at the pre-append
-    # version still lists exactly the first snapshot, and a plain
-    # collection refuses a versioned export
+    # version still lists exactly the first snapshot
     m_old = store.export_manifest("proj", "taps", version=m["version"])
     assert m_old["files"] == m["files"]
     m_new = store.export_manifest("proj", "taps")
     assert m_new["version"] == m["version"] + 1
     assert len(m_new["files"]) == len(m["files"]) + 1
-    collector.collect("proj", "plain", {"x": 0, "_time": "2024-03-01 09:00:00"})
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="transaction-logged"):
-        store.export_manifest("proj", "plain", version=1)
+    # a collection written by collect alone exports versions too
+    collector.collect("proj", "other", {"x": 0, "_time": "2024-03-01 09:00:00"})
+    assert len(store.export_manifest("proj", "other", version=1)["files"]) == 1
 
     # store.read(version=) resolves the same snapshot the manifest
-    # lists — and refuses plain collections
+    # lists
     old_xs = sorted(r["x"] for r in store.read("proj", "taps", version=m["version"]).collect())
     assert old_xs == [0, 1, 2]
     assert sorted(r["x"] for r in store.read("proj", "taps").collect()) == [0, 1, 2, 99]
-    with _pytest.raises(ValueError, match="transaction-logged"):
-        store.read("proj", "plain", version=1)
+    assert [r["x"] for r in store.read("proj", "other", version=1).collect()] == [0]
 
 
 def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_path):
@@ -217,7 +257,6 @@ def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_
 
     collector = _collector(spark, warehouse)
     collector.collect("proj", "c", {"v": -1, "_time": "2024-01-01 09:00:00"})
-    collector.store.enable_txn("proj", "c")
 
     ing = StreamingIngest(collector, "proj", dedup_uuids=False)
     ing._commit_ns = "testns"
@@ -257,15 +296,14 @@ def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_
 
 
 def test_enable_txn_on_fresh_project(spark, warehouse):
-    """A project whose warehouse directory does not exist yet can
-    switch a collection to txn mode before its first write: the
-    maintenance lock creates its parent directory."""
+    """enable_txn on a project whose warehouse directory does not
+    exist yet is a no-op, and the first write creates the log."""
     collector = _collector(spark, warehouse)
     store = collector.store
     store.metastore.create_project("fresh")
     assert not os.path.exists(os.path.join(warehouse, "fresh"))
 
     store.enable_txn("fresh", "clicks")
-    assert store.txn_mode("fresh", "clicks")
     collector.collect("fresh", "clicks", {"x": 1, "_time": "2024-01-05 09:00:00"})
     assert [r["x"] for r in store.read("fresh", "clicks").collect()] == [1]
+    assert store.txn_table("fresh", "clicks").version() == 1
